@@ -230,3 +230,31 @@ def test_snapshot_diff_surfaces_changes(spark, seq, split, tmp_path):
     late_parts = rollup.rollup_base(late, "1m")
     n_late_buckets = late_parts.count()
     assert added <= n_late_buckets and removed <= n_late_buckets
+
+
+def test_refresh_all_tiers_collects_touched_days_once(
+    spark, seq, split, tmp_path, monkeypatch
+):
+    """One daily fold computes the late partials' day list once for the
+    whole cascade, not again per tier."""
+    on_time, late, _ = split
+    cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
+    base_1m = rollup.rollup_base(on_time, "1m")
+    for tier, df in (
+        ("1m", base_1m),
+        ("1h", rollup.rollup_cascade(base_1m, "1h")),
+        ("1d", rollup.rollup_cascade(base_1m, "1d")),
+    ):
+        cat.write_snapshot(
+            rollup.day_partition(df), f"tier_{tier}", partition_by=["day"]
+        )
+    calls = []
+    real = incremental.touched_days
+
+    def counting(late_parts):
+        calls.append(1)
+        return real(late_parts)
+
+    monkeypatch.setattr(incremental, "touched_days", counting)
+    incremental.refresh_all_tiers(cat, spark, late)
+    assert len(calls) == 1

@@ -2,7 +2,7 @@
 values + FOR-packed token streams, all numpy-vectorized.
 
 A *bucket* is the unit the pipeline compresses inside
-``applyInPandas`` — all sequences landing in one
+``applyInArrow`` — all sequences landing in one
 (source, hash(doc_id) % B, salt) cell, sorted by (ts, doc_id).
 
 Encoded layout (little-endian)::

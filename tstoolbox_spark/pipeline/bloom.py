@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..textops.dedup import md5int
+from . import rollup
 
 #: default geometry — 1024 words = 64,512 bits; with k=4 the false-
 #: positive rate stays under 1% up to ~6,400 member ids per filter.
@@ -82,12 +83,12 @@ def bloom_build(
     shuffle moves at most the word table.
     """
     rows = _exploded_positions(df, id_col, k, words)
-    return rows.groupBy("word").agg(F.bit_or("mask").alias("mask"))
+    return rollup.base(rows, rollup.BLOOM, None)
 
 
 def bloom_merge(parts: DataFrame) -> DataFrame:
     """Fold filters built over disjoint batches — bit_or, exact."""
-    return parts.groupBy("word").agg(F.bit_or("mask").alias("mask"))
+    return rollup.merge(parts, rollup.BLOOM)
 
 
 def bloom_probe(

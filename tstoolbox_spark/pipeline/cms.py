@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..textops.dedup import md5int
+from . import rollup
 
 #: default grid — ε ≈ 2e/2048 ≈ 0.0027 of the L1 mass, δ = 1/16
 CMS_DEPTH = 4
@@ -37,6 +38,31 @@ def cms_bucket(key: Column, j: int, width: int = CMS_WIDTH) -> Column:
     """Row j's bucket for a key: md5(key || '|cms<j>') mod width."""
     return md5int(F.concat(key.cast("string"), F.lit(f"|cms{j}"))) % F.lit(
         width
+    )
+
+
+def cms_cells(
+    df: DataFrame,
+    key_col: str,
+    depth: int = CMS_DEPTH,
+    width: int = CMS_WIDTH,
+    carry_cols: Sequence[str] = (),
+) -> DataFrame:
+    """One (carry…, j, bucket) row per input row and sketch row j — the
+    shared front end of the batch grid, its streaming twin and the
+    probe side of :func:`cms_estimate`."""
+    k = F.col(key_col)
+    pairs = F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("j"),
+                cms_bucket(k, j, width).alias("bucket"),
+            )
+            for j in range(depth)
+        ]
+    )
+    return df.select(*carry_cols, F.explode(pairs).alias("jb")).select(
+        *carry_cols, "jb.j", "jb.bucket"
     )
 
 
@@ -58,46 +84,16 @@ def cms_partials(
     depth × width × tier-buckets rows — partial aggregation collapses
     the explosion map-side, so the shuffle moves at most the grid.
     """
-    k = F.col(key_col)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                cms_bucket(k, j, width).alias("bucket"),
-            )
-            for j in range(depth)
-        ]
-    )
     w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
-    rows = df.select(
-        *( [F.col(ts_col)] if tier is not None else [] ),
-        F.explode(pairs).alias("jb"),
-        w.alias("__w"),
-    )
-    grp: list[Column] = []
-    if tier is not None:
-        from .rollup import TIERS
-
-        grp.append(F.date_trunc(TIERS[tier], F.col(ts_col)).alias("ts"))
-    return rows.groupBy(
-        *grp, F.col("jb.j").alias("j"), F.col("jb.bucket").alias("bucket")
-    ).agg(F.sum("__w").alias("cnt"))
+    carry = ([ts_col] if tier is not None else []) + ["__w"]
+    rows = cms_cells(df.withColumn("__w", w), key_col, depth, width, carry)
+    return rollup.base(rows, rollup.CMS, tier, (), ts_col)
 
 
 def cms_merge(partials: DataFrame, tier: str | None = None) -> DataFrame:
     """Fold finer partials into a coarser tier (or a single global
     grid when ``tier`` is None) — a plain re-sum, exact."""
-    if tier is None:
-        grp = [F.col("j"), F.col("bucket")]
-    else:
-        from .rollup import TIERS
-
-        grp = [
-            F.date_trunc(TIERS[tier], F.col("ts")).alias("ts"),
-            F.col("j"),
-            F.col("bucket"),
-        ]
-    return partials.groupBy(*grp).agg(F.sum("cnt").alias("cnt"))
+    return rollup.cascade(partials, rollup.CMS, tier)
 
 
 def cms_estimate(
@@ -120,21 +116,8 @@ def cms_estimate(
     streams, so neither big-table shuffle nor driver collection
     appears anywhere.
     """
-    k = F.col(key_col)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                cms_bucket(k, j, width).alias("bucket"),
-            )
-            for j in range(depth)
-        ]
-    )
-    probe_rows = probes.select(
-        *group_cols, k.alias(key_col), F.explode(pairs).alias("jb")
-    ).select(
-        *group_cols, key_col, F.col("jb.j").alias("j"),
-        F.col("jb.bucket").alias("bucket"),
+    probe_rows = cms_cells(
+        probes, key_col, depth, width, carry_cols=(*group_cols, key_col)
     )
     joined = probe_rows.join(
         F.broadcast(partials), on=[*group_cols, "j", "bucket"], how="left"

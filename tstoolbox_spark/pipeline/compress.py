@@ -14,8 +14,7 @@ Why Arrow (not pandas) grouped maps: the hot columns are
 flat buffers — ``ListArray.flatten()`` is the already-concatenated
 token stream and ``StringArray.buffers()`` give (offsets, utf8 blob) —
 so the codec consumes/produces them zero-copy, with no object-array
-materialization and no np.concatenate over per-row arrays. The pandas
-path is kept as a fallback for older PySpark.
+materialization and no np.concatenate over per-row arrays.
 
 Scale notes: each cell is sized by bucketing.py to a bounded row count
 so batches fit worker memory; the groupBy is the one pre-codec shuffle.

@@ -78,19 +78,13 @@ def ddsketch_base(
     alpha: float = 0.01,
 ) -> DataFrame:
     """Per-tier-bucket DDSketch partials: rows (keys, ts, v=bucket,
-    cnt). Same single-shuffle shape as ``rollup.hist_base``; bucket
+    cnt) — the ``rollup.HIST`` histogram with ``v = dd_bucket(x)``; bucket
     count per tier cell is bounded by ~2·ln(max/min)/ln(γ) (a few
     hundred for any realistic double range), so partials stay tiny."""
-    unit = rollup.TIERS[tier]
-    return (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *key_cols,
-            F.date_trunc(unit, F.col(ts_col)).alias("ts"),
-            dd_bucket(F.col(value_col), alpha).alias("v"),
-        )
-        .agg(F.count("*").alias("cnt"))
+    bucketed = df.where(F.col(value_col).isNotNull()).withColumn(
+        "v", dd_bucket(F.col(value_col), alpha)
     )
+    return rollup.base(bucketed, rollup.HIST, tier, key_cols, ts_col)
 
 
 def ddsketch_cascade(

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rollup import TIERS
+from .rollup import PHLL, base, cascade, hll_sketch, merge
 
 
 def hll_base(
@@ -48,11 +48,9 @@ def hll_base(
     column per (keys, bucket). Same single groupBy shuffle as
     ``rollup_base``; the sketch aggregate is map-side combinable
     (partial sketches union in the combiner)."""
-    unit = TIERS[tier]
-    return df.groupBy(
-        *key_cols, F.date_trunc(unit, F.col(ts_col)).alias("ts")
-    ).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("distinct_hll")
+    return base(
+        df.withColumn("__value", F.col(value_col)), hll_sketch(lg_k), tier,
+        key_cols, ts_col,
     )
 
 
@@ -61,10 +59,7 @@ def hll_cascade(
 ) -> DataFrame:
     """Finer sketch tier → coarser sketch tier (register-wise max via
     sketch union). Scans sketches, never raw rows."""
-    unit = TIERS[tier]
-    return finer.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts")
-    ).agg(F.hll_union_agg(F.col("distinct_hll")).alias("distinct_hll"))
+    return cascade(finer, hll_sketch(), tier, key_cols)
 
 
 def hll_estimate(
@@ -162,20 +157,8 @@ def phll_partial(
     shuffle; MAX partials combine map-side, and the output is bounded
     at m=256 rows per (keys, bucket) whatever the input cardinality.
     """
-    from .rollup import TIERS
-
-    unit = TIERS[tier]
-    bucketed = df.select(
-        *key_cols,
-        F.date_trunc(unit, F.col(ts_col)).alias("ts"),
-        value_col,
-    )
-    rows = phll_register_rows(
-        bucketed, value_col, carry_cols=(*key_cols, "ts")
-    )
-    return rows.groupBy(*key_cols, "ts", "idx").agg(
-        F.max("rho").alias("rho")
-    )
+    rows = phll_register_rows(df, value_col, carry_cols=(*key_cols, ts_col))
+    return base(rows, PHLL, tier, key_cols, ts_col)
 
 
 def phll_cascade(
@@ -184,12 +167,7 @@ def phll_cascade(
     """Finer register tier → coarser (register-wise MAX). Scans the
     bounded register relation, never raw rows; also the late-partial
     fold (MAX is idempotent, so re-unioning a batch is safe)."""
-    from .rollup import TIERS
-
-    unit = TIERS[tier]
-    return finer.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts"), "idx"
-    ).agg(F.max("rho").alias("rho"))
+    return cascade(finer, PHLL, tier, key_cols)
 
 
 def phll_estimate(
@@ -283,11 +261,7 @@ def phll_overlap(
     b = phll_estimate(reg_b, key_cols=key_cols).select(
         *key_cols, "ts", F.col("approx_distinct").alias("est_b")
     )
-    union_reg = (
-        reg_a.unionByName(reg_b)
-        .groupBy(*key_cols, "ts", "idx")
-        .agg(F.max("rho").alias("rho"))
-    )
+    union_reg = merge(reg_a.unionByName(reg_b), PHLL, *key_cols, "ts")
     u = phll_estimate(union_reg, key_cols=key_cols).select(
         *key_cols, "ts", F.col("approx_distinct").alias("est_union")
     )

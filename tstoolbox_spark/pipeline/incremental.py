@@ -7,8 +7,9 @@ WITHOUT recomputing the tier from raw history (TimescaleDB calls this
 a continuous-aggregate refresh; Iceberg expresses the write side as
 ``overwritePartitions``).
 
-The engine's tier rows are COMPOSABLE PARTIALS — sum/count/min/max
-(pipeline/rollup.py) — so merging a late batch never rescans raw:
+The engine's tier rows are COMPOSABLE PARTIALS — sum/count/min/max,
+the ``rollup.N_TOK`` spec (pipeline/rollup.py) — so merging a late
+batch never rescans raw:
 
     refreshed_bucket = merge(existing_partial, partial(late_rows))
 
@@ -43,8 +44,21 @@ def merge_partials(
 ) -> DataFrame:
     """Re-aggregate partial rows at their OWN granularity — the merge
     step of an incremental refresh. ``date_trunc`` at the same unit is
-    idempotent, so this is exactly ``rollup_cascade`` tier→tier."""
-    return rollup.rollup_cascade(parts, tier, key_cols)
+    idempotent, so this is the ``rollup.N_TOK`` merge tier→tier."""
+    return rollup.cascade(parts, rollup.N_TOK, tier, key_cols)
+
+
+def _fold(
+    existing: DataFrame,
+    late_parts: DataFrame,
+    tier: str,
+    key_cols: tuple[str, ...],
+) -> DataFrame:
+    return merge_partials(
+        existing.unionByName(late_parts.select(*existing.columns)),
+        tier,
+        key_cols,
+    )
 
 
 def incremental_tier_refresh(
@@ -57,11 +71,7 @@ def incremental_tier_refresh(
     partials. Never touches raw history: the only aggregation over raw
     is over ``late_raw`` itself."""
     late_parts = rollup.rollup_base(late_raw, tier, key_cols)
-    return merge_partials(
-        existing.unionByName(late_parts.select(*existing.columns)),
-        tier,
-        key_cols,
-    )
+    return _fold(existing, late_parts, tier, key_cols)
 
 
 def touched_days(late_parts: DataFrame) -> list[str]:
@@ -74,6 +84,45 @@ def touched_days(late_parts: DataFrame) -> list[str]:
         .distinct()
         .collect()
     )
+
+
+def _refresh(
+    catalog: ParquetSnapshotCatalog,
+    spark: SparkSession,
+    tables: dict[str, str],
+    late_parts: DataFrame,
+    days: list[str],
+    key_cols: tuple[str, ...],
+) -> dict[str, str]:
+    """Fold ``late_parts`` into the ``days`` partitions of the first
+    (finest) of ``tables`` ({tier: table}), then rebuild the same days
+    of each coarser table from the one before it; only those
+    partitions are read and overwritten. Returns {tier: snapshot id}.
+    """
+    if not days:
+        return {
+            tier: (catalog.current_snapshot(table) or {}).get("id", "")
+            for tier, table in tables.items()
+        }
+    out: dict[str, str] = {}
+    finer = None
+    for tier, table in tables.items():
+        # partition-pruned scan of the touched days only
+        src = (
+            catalog.read(spark, finer or table)
+            .where(F.col("day").isin(days))
+            .drop("day")
+        )
+        merged = (
+            rollup.rollup_cascade(src, tier, key_cols)
+            if finer
+            else _fold(src, late_parts, tier, key_cols)
+        )
+        out[tier] = catalog.overwrite_partitions(
+            spark, rollup.day_layout(merged, key_cols), table, "day", days
+        )
+        finer = table
+    return out
 
 
 def refresh_tier_snapshot(
@@ -91,20 +140,9 @@ def refresh_tier_snapshot(
     """
     late_parts = rollup.rollup_base(late_raw, tier, key_cols)
     days = touched_days(late_parts)
-    if not days:
-        cur = catalog.current_snapshot(table)
-        return cur["id"] if cur else ""
-    # partition-pruned scan of the touched days only
-    existing = catalog.read(spark, table).where(F.col("day").isin(days))
-    merged = merge_partials(
-        existing.drop("day").unionByName(
-            late_parts.select(*[c for c in existing.columns if c != "day"])
-        ),
-        tier,
-        key_cols,
-    )
-    out = rollup.day_partition(merged).repartition(F.col("day"))
-    return catalog.overwrite_partitions(spark, out, table, "day", days)
+    return _refresh(
+        catalog, spark, {tier: table}, late_parts, days, key_cols
+    )[tier]
 
 
 def refresh_all_tiers(
@@ -112,41 +150,22 @@ def refresh_all_tiers(
     spark: SparkSession,
     late_raw: DataFrame,
     key_cols: tuple[str, ...] = ("source",),
-    tables: dict[str, str] | None = None,
 ) -> dict[str, str]:
-    """End-to-end incremental refresh of the WHOLE tier cascade for a
-    late batch: fold into 1m, then rebuild ONLY the touched day
-    partitions of 1h and 1d from the refreshed finer tier.
+    """End-to-end incremental refresh of the WHOLE tier cascade
+    (``tier_1m``/``tier_1h``/``tier_1d``) for a late batch: fold into
+    1m, then rebuild ONLY the touched day partitions of 1h and 1d from
+    the refreshed finer tier.
 
     Day boundaries align with every tier, so a touched day's coarser
     rows are fully derivable from that day's finer partials — the
     coarser refresh is a partition-pruned ``rollup_cascade`` over the
     touched days followed by ``overwrite_partitions``; untouched days
-    of every tier are carried by reference. Total cost is
+    of every tier are carried by reference. The late partials and the
+    touched days are computed once for the whole cascade. Total cost is
     O(|late| + touched-day partials x 3), independent of history
     length. Returns {tier: new snapshot id}.
     """
-    tables = tables or {"1m": "tier_1m", "1h": "tier_1h", "1d": "tier_1d"}
     late_parts = rollup.rollup_base(late_raw, "1m", key_cols)
     days = touched_days(late_parts)
-    out: dict[str, str] = {}
-    if not days:
-        for tier, tbl in tables.items():
-            cur = catalog.current_snapshot(tbl)
-            out[tier] = cur["id"] if cur else ""
-        return out
-    out["1m"] = refresh_tier_snapshot(
-        catalog, spark, tables["1m"], late_raw, "1m", key_cols
-    )
-    for finer, coarser in (("1m", "1h"), ("1h", "1d")):
-        finer_df = (
-            catalog.read(spark, tables[finer])
-            .where(F.col("day").isin(days))
-            .drop("day")
-        )
-        merged = rollup.rollup_cascade(finer_df, coarser, key_cols)
-        redone = rollup.day_partition(merged).repartition(F.col("day"))
-        out[coarser] = catalog.overwrite_partitions(
-            spark, redone, tables[coarser], "day", days
-        )
-    return out
+    tables = {t: f"tier_{t}" for t in rollup.TIER_ORDER}
+    return _refresh(catalog, spark, tables, late_parts, days, key_cols)

@@ -379,7 +379,6 @@ def continuous_near_dup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     schema: str = "doc_id string, text string",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
     **dedup_kw,
 ):
@@ -428,10 +427,9 @@ def continuous_near_dup_clusters(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
-    writer = (
+    return (
         stream.writeStream.foreachBatch(_fold)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

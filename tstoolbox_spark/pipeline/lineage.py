@@ -6,10 +6,11 @@ per-partition lineage and metrics rows."
 Every pipeline stage writes, together with its data snapshot, a
 lineage table whose rows are the stage's work units:
 
-    stage    'compress' | 'tier_1m' | 'tier_1h' | 'tier_1d'
     unit     '<source>/<bucket>/<salt>' (compress) or '<source>/<day>'
+    stage    'compress' | 'tier_1m' | 'tier_1h' | 'tier_1d'
     snapshot the data snapshot id this unit landed in
-    rows_in / rows_out / bytes_out   metrics
+    rows_out the unit's row count: sequences (sum of ``n_rows``) for a
+             compressed cell, tier rows for a tier unit
 
 Resume contract: a restarted run lists pending units, anti-joins them
 against lineage rows of completed snapshots, and processes only the

@@ -17,6 +17,13 @@ the classic partial-aggregation reuse Catalyst performs inside one
 query, applied across materializations. Each tier groupBy shuffles on
 (source, tier_ts); AQE coalesces the post-shuffle partitions.
 
+Every tier summary (the n_tok partials above, the value histogram and
+DDSketch, CMS, Bloom, portable and DataSketches HLL) is one
+:class:`Partial` spec — grouping columns, init aggregates, merge
+aggregates. ``base``/``cascade`` here, the streaming twins
+(streaming/continuous.py), incremental refresh and the router all
+read the spec, so the merge is written once per summary.
+
 Bit-for-bit parity with tstoolbox aggregate (functions/aggregate.py:
 237-239 → pandas resample): sum/count/min/max of int64 are exact, and
 mean = sum/count in float64 is exactly pandas' mean for int inputs.
@@ -27,7 +34,9 @@ resample's left-closed/left-labeled default for T/H/D.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 TIERS = {
@@ -46,33 +55,122 @@ TIERS = {
 }
 TIER_ORDER = ["1m", "1h", "1d"]
 
-PARTIAL_COLS = ["n_tok_sum", "n_tok_count", "n_tok_min", "n_tok_max"]
+
+@dataclass(frozen=True)
+class Partial:
+    """One mergeable tier summary: init over raw rows, merge over its
+    own partials (finalize happens at read, never materialized).
+
+    ``group``: grouping columns beyond (keys, tier bucket).
+    ``init``: ``(output, F function, input column, *literal args)``
+    aggregates over raw rows.
+    ``merge``: ``(column, F function)`` aggregates folding partials into
+    partials of the same name — associative and commutative, so a
+    cascade, a late-batch fold and a router read are all this merge.
+
+    Names only (no ``Column``), so specs are built at import time.
+    """
+
+    group: tuple[str, ...]
+    init: tuple[tuple, ...]
+    merge: tuple[tuple[str, str], ...]
+
+    @property
+    def cols(self) -> list[str]:
+        return [c for c, _ in self.merge]
+
+    def init_aggs(self) -> list[Column]:
+        return [getattr(F, fn)(*args).alias(out) for out, fn, *args in self.init]
+
+    def merge_aggs(self) -> list[Column]:
+        return [getattr(F, fn)(c).alias(c) for c, fn in self.merge]
+
+
+#: sum/count/min/max of n_tok (mean = sum / count at read: ``with_mean``)
+N_TOK = Partial(
+    group=(),
+    init=(
+        ("n_tok_sum", "sum", "n_tok"),
+        ("n_tok_count", "count", "n_tok"),
+        ("n_tok_min", "min", "n_tok"),
+        ("n_tok_max", "max", "n_tok"),
+    ),
+    merge=(
+        ("n_tok_sum", "sum"),
+        ("n_tok_count", "sum"),
+        ("n_tok_min", "min"),
+        ("n_tok_max", "max"),
+    ),
+)
+#: value-count histogram over ``v`` (exact values, or DDSketch buckets)
+HIST = Partial(group=("v",), init=(("cnt", "count", "*"),), merge=(("cnt", "sum"),))
+#: count-min-sketch counter grid; rows carry their weight in ``__w``
+CMS = Partial(
+    group=("j", "bucket"), init=(("cnt", "sum", "__w"),), merge=(("cnt", "sum"),)
+)
+#: Bloom filter words; rows carry one member bit in ``mask``
+BLOOM = Partial(
+    group=("word",), init=(("mask", "bit_or", "mask"),), merge=(("mask", "bit_or"),)
+)
+#: portable-HLL registers; rows carry one hash's ``rho``
+PHLL = Partial(
+    group=("idx",), init=(("rho", "max", "rho"),), merge=(("rho", "max"),)
+)
+
+
+def hll_sketch(lg_k: int = 12) -> Partial:
+    """DataSketches HLL of ``__value`` with 2^lg_k registers (the
+    union merge reads lg_k from the sketches themselves)."""
+    return Partial(
+        group=(),
+        init=(("distinct_hll", "hll_sketch_agg", "__value", lg_k),),
+        merge=(("distinct_hll", "hll_union_agg"),),
+    )
+
+
+def _bucket(tier: str | None, ts_col: str) -> list[Column]:
+    if tier is None:
+        return []
+    return [F.date_trunc(TIERS[tier], F.col(ts_col)).alias("ts")]
+
+
+def base(
+    df: DataFrame,
+    spec: Partial,
+    tier: str | None,
+    key_cols: tuple[str, ...] = (),
+    ts_col: str = "ts",
+) -> DataFrame:
+    """Raw rows → ``tier`` partials of ``spec``, one row per (keys,
+    tier bucket, spec.group). ``tier=None`` keeps no time bucket."""
+    return df.groupBy(*key_cols, *_bucket(tier, ts_col), *spec.group).agg(
+        *spec.init_aggs()
+    )
+
+
+def merge(parts: DataFrame, spec: Partial, *by: str | Column) -> DataFrame:
+    """Merge partials of ``spec`` per (``by``…, spec.group)."""
+    return parts.groupBy(*by, *spec.group).agg(*spec.merge_aggs())
+
+
+def cascade(
+    finer: DataFrame,
+    spec: Partial,
+    tier: str | None,
+    key_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Finer partials → ``tier`` partials (``None``: all time in one)."""
+    return merge(finer, spec, *key_cols, *_bucket(tier, "ts"))
 
 
 def rollup_base(df: DataFrame, tier: str = "1m", key_cols: tuple[str, ...] = ("source",)) -> DataFrame:
     """Raw sequences → finest tier partials."""
-    unit = TIERS[tier]
-    return df.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts")
-    ).agg(
-        F.sum("n_tok").alias("n_tok_sum"),
-        F.count("n_tok").alias("n_tok_count"),
-        F.min("n_tok").alias("n_tok_min"),
-        F.max("n_tok").alias("n_tok_max"),
-    )
+    return base(df, N_TOK, tier, key_cols)
 
 
 def rollup_cascade(finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)) -> DataFrame:
     """Finer-tier partials → coarser tier partials (partial merge)."""
-    unit = TIERS[tier]
-    return finer.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts")
-    ).agg(
-        F.sum("n_tok_sum").alias("n_tok_sum"),
-        F.sum("n_tok_count").alias("n_tok_count"),
-        F.min("n_tok_min").alias("n_tok_min"),
-        F.max("n_tok_max").alias("n_tok_max"),
-    )
+    return cascade(finer, N_TOK, tier, key_cols)
 
 
 def hist_base(
@@ -92,22 +190,14 @@ def hist_base(
     TimescaleDB ``percentile_agg`` continuous-aggregate shape, exact
     instead of sketched. Same groupBy shuffle as ``rollup_base``.
     """
-    unit = TIERS[tier]
-    return df.groupBy(
-        *key_cols,
-        F.date_trunc(unit, F.col(ts_col)).alias("ts"),
-        F.col(value_col).alias("v"),
-    ).agg(F.count("*").alias("cnt"))
+    return base(df.withColumn("v", F.col(value_col)), HIST, tier, key_cols, ts_col)
 
 
 def hist_cascade(
     finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)
 ) -> DataFrame:
     """Finer-tier histogram partials → coarser tier (counts add)."""
-    unit = TIERS[tier]
-    return finer.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts"), "v"
-    ).agg(F.sum("cnt").alias("cnt"))
+    return cascade(finer, HIST, tier, key_cols)
 
 
 def hist_quantiles(
@@ -170,6 +260,27 @@ def day_partition(tier_df: DataFrame) -> DataFrame:
     """Add the day partition column tiers are stored under (TTL drops
     whole day partitions — metadata-only)."""
     return tier_df.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
+
+
+def day_layout(
+    tier_df: DataFrame, key_cols: tuple[str, ...] = ("source",)
+) -> DataFrame:
+    """The storage layout of every tier write, fresh or refreshed.
+
+    One shuffle partition per day before partitionBy('day'): otherwise
+    every post-agg partition writes a sliver into every day directory
+    (days x shuffle.partitions small files — slow commits, slow scans,
+    and a metadata-only TTL drop would still list thousands of files).
+    A day of 1m partials is sources x 1440 rows — one task per day is
+    the right grain at any SF. sortWithinPartitions(keys, ts): parquet
+    row-group min/max stats become disjoint per (key, ts range), so
+    point/range reads on a key or time slice skip whole row groups.
+    """
+    return (
+        day_partition(tier_df)
+        .repartition(F.col("day"))
+        .sortWithinPartitions(*key_cols, "ts")
+    )
 
 
 def hist_trimmed_mean(
@@ -367,10 +478,7 @@ def hist_rebin(
     """
     if width < 1:
         raise ValueError(f"width must be >= 1, got {width}")
-    keys = [*key_cols, "ts"]
-    return hist.groupBy(
-        *keys,
-        (F.floor(F.col("v") / F.lit(width)) * F.lit(width))
-        .cast("int")
-        .alias("v"),
-    ).agg(F.sum("cnt").alias("cnt"))
+    rebinned = hist.withColumn(
+        "v", (F.floor(F.col("v") / F.lit(width)) * F.lit(width)).cast("int")
+    )
+    return merge(rebinned, HIST, *key_cols, "ts")

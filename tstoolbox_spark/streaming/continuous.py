@@ -2,33 +2,87 @@
 
 The reference is batch-only (no watermarks, no stateful operators —
 SURVEY.md §2.9), and the north rule's continuous aggregates are batch
-rollups; this module is the *incremental-ingest* mode of the same 1m
-tier: new sequence files appear under a directory, Structured
-Streaming folds them into the finest tier with exactly the batch
-partial-aggregate schema, so the 1h/1d cascade and all readers are
-oblivious to which mode produced the minutes.
+rollups; this module is the *incremental-ingest* mode of the same
+tiers: new sequence files appear under a directory, Structured
+Streaming folds them into tier partials with exactly the batch
+partial-aggregate schema, so the batch cascade and all readers are
+oblivious to which mode produced the buckets.
 
-Design (Spark-first):
-- ``readStream`` file source over the sequence directory (schema
-  pinned — streaming requires it).
-- Event-time tumbling window of 1 minute + watermark for late data;
-  append output mode emits a minute only once its watermark passes —
-  the streaming analog of a closed tier bucket.
-- Sink = parquet directory with checkpointLocation: exactly-once file
-  sink; resume = restart with the same checkpoint (the streaming
-  analog of the batch pipeline's snapshot/lineage resume).
-- ``trigger(availableNow=True)`` drains what exists then stops, which
-  is also how the test drives it deterministically.
+Design (Spark-first): every tier twin here is one call into a single
+function, ``_stream_tier``, that reads the summary's
+``pipeline.rollup.Partial`` spec — the same spec the batch
+``base``/``cascade`` use, so the two modes cannot drift apart:
+- ``readStream`` file source over the input directory (schema pinned —
+  streaming requires it), then the summary's row front end (CMS cells,
+  Bloom positions, HLL registers; none for n_tok and the histogram).
+- Event-time tumbling window of one tier unit (``1 <TIERS[tier]>``) +
+  watermark for late data, grouped by (window, keys, spec.group); the
+  spec's init aggregates over raw rows, or its merge aggregates when
+  cascading from a finer streamed tier. Append output mode emits a
+  bucket only once its watermark passes — the streaming analog of a
+  closed tier bucket — labeled ``w.start AS ts`` like ``date_trunc``.
+- Sink = ``parquet_sink``: parquet directory with checkpointLocation,
+  an exactly-once file sink; resume = restart with the same checkpoint
+  (the streaming analog of the batch pipeline's snapshot/lineage
+  resume). ``trigger(availableNow=True)`` drains what exists then
+  stops, which is how every caller drives it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline import rollup
+from ..pipeline.bloom import BLOOM_K, BLOOM_WORDS, _exploded_positions
+from ..pipeline.cms import CMS_DEPTH, CMS_WIDTH, cms_cells
+from ..pipeline.hll import phll_register_rows
 from ..timeaxis import with_time_axis
 
 SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
+
+
+def parquet_sink(df: DataFrame, path: str, checkpoint_dir: str):
+    """Start an append-mode, checkpointed parquet sink that drains what
+    exists and stops; returns the StreamingQuery."""
+    return (
+        df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _sequences(spark: SparkSession, input_dir: str) -> DataFrame:
+    return with_time_axis(spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir))
+
+
+def _stream_tier(
+    rows: DataFrame,
+    spec: rollup.Partial,
+    tier: str,
+    watermark: str,
+    key_cols: tuple[str, ...],
+    tier_dir: str,
+    checkpoint_dir: str,
+    merge: bool = False,
+):
+    """Windowed init (raw rows) or merge (finer partials) of ``spec``
+    per closed ``tier`` bucket, appended to ``tier_dir``."""
+    if tier not in rollup.TIER_ORDER:
+        raise ValueError(
+            f"streaming tier must be one of {rollup.TIER_ORDER}, got {tier!r}"
+        )
+    window = F.window("ts", f"1 {rollup.TIERS[tier]}").alias("w")
+    out = (
+        rows.withWatermark("ts", watermark)
+        .groupBy(window, *key_cols, *spec.group)
+        .agg(*(spec.merge_aggs() if merge else spec.init_aggs()))
+        .select(F.col("w.start").alias("ts"), *key_cols, *spec.group, *spec.cols)
+    )
+    return parquet_sink(out, tier_dir, checkpoint_dir)
 
 
 def continuous_rollup(
@@ -39,7 +93,6 @@ def continuous_rollup(
     tier: str = "1m",
     watermark: str = "2 minutes",
     key_cols: tuple[str, ...] = ("source",),
-    available_now: bool = True,
 ):
     """Start the streaming 1m rollup; returns the StreamingQuery.
 
@@ -47,30 +100,10 @@ def continuous_rollup(
     (ts, keys, n_tok_sum/count/min/max partials), so
     ``rollup_cascade`` consumes it unchanged.
     """
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    agg = (
-        seq.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", unit).alias("w"), *key_cols)
-        .agg(
-            F.sum("n_tok").alias("n_tok_sum"),
-            F.count("n_tok").alias("n_tok_count"),
-            F.min("n_tok").alias("n_tok_min"),
-            F.max("n_tok").alias("n_tok_max"),
-        )
-        .select(F.col("w.start").alias("ts"), *key_cols,
-                "n_tok_sum", "n_tok_count", "n_tok_min", "n_tok_max")
+    return _stream_tier(
+        _sequences(spark, input_dir), rollup.N_TOK, tier, watermark, key_cols,
+        tier_dir, checkpoint_dir,
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def continuous_hist(
@@ -81,7 +114,6 @@ def continuous_hist(
     tier: str = "1m",
     watermark: str = "2 minutes",
     key_cols: tuple[str, ...] = ("source",),
-    available_now: bool = True,
 ):
     """Streaming value-count HISTOGRAM partials — the incremental-ingest
     mode of ``pipeline.rollup.hist_base``. Output schema
@@ -92,28 +124,10 @@ def continuous_hist(
     partial composable; append mode + watermark emit a bucket's
     histogram once it closes. Exactly-once via the file-sink
     transaction log, resume via the checkpoint."""
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    agg = (
-        seq.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", unit).alias("w"),
-            *key_cols,
-            F.col("n_tok").alias("v"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("ts"), *key_cols, "v", "cnt")
+    rows = _sequences(spark, input_dir).withColumn("v", F.col("n_tok"))
+    return _stream_tier(
+        rows, rollup.HIST, tier, watermark, key_cols, tier_dir, checkpoint_dir
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def continuous_ingest_dedup(
@@ -122,7 +136,6 @@ def continuous_ingest_dedup(
     out_dir: str,
     checkpoint_dir: str,
     watermark: str = "30 minutes",
-    available_now: bool = True,
 ):
     """Streaming exact-dedup at ingest: drop sequences whose token
     content was already seen, BEFORE they reach the rollup/codec
@@ -142,25 +155,14 @@ def continuous_ingest_dedup(
     """
     from ..textops.dedup import md5int
 
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    hashed = seq.withColumn(
+    hashed = _sequences(spark, input_dir).withColumn(
         "content_hash",
         md5int(F.concat_ws(",", F.col("tokens").cast("array<string>"))),
     )
     deduped = hashed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["content_hash"]
     )
-    writer = (
-        deduped.drop("content_hash")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return parquet_sink(deduped.drop("content_hash"), out_dir, checkpoint_dir)
 
 
 def continuous_cascade(
@@ -171,7 +173,6 @@ def continuous_cascade(
     tier: str = "1h",
     watermark: str = "2 hours",
     key_cols: tuple[str, ...] = ("source",),
-    available_now: bool = True,
 ):
     """Materialize a coarser tier (1h/1d) FROM the streaming finer
     tier's parquet output — the streaming twin of
@@ -193,30 +194,12 @@ def continuous_cascade(
     """
     if tier not in ("1h", "1d"):
         raise ValueError(f"cascade tier must be 1h or 1d, got {tier!r}")
-    unit = {"1h": "1 hour", "1d": "1 day"}[tier]
     schema = spark.read.parquet(finer_dir).schema
     stream = spark.readStream.schema(schema).parquet(finer_dir)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", unit).alias("w"), *key_cols)
-        .agg(
-            F.sum("n_tok_sum").alias("n_tok_sum"),
-            F.sum("n_tok_count").alias("n_tok_count"),
-            F.min("n_tok_min").alias("n_tok_min"),
-            F.max("n_tok_max").alias("n_tok_max"),
-        )
-        .select(F.col("w.start").alias("ts"), *key_cols,
-                "n_tok_sum", "n_tok_count", "n_tok_min", "n_tok_max")
+    return _stream_tier(
+        stream, rollup.N_TOK, tier, watermark, key_cols, tier_dir,
+        checkpoint_dir, merge=True,
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def continuous_cms(
@@ -227,9 +210,8 @@ def continuous_cms(
     tier: str = "1m",
     key_col: str = "doc_id",
     watermark: str = "2 minutes",
-    depth: int | None = None,
-    width: int | None = None,
-    available_now: bool = True,
+    depth: int = CMS_DEPTH,
+    width: int = CMS_WIDTH,
 ):
     """Streaming count-min-sketch partials — the incremental-ingest
     mode of ``pipeline.cms.cms_partials``: per closed tier bucket,
@@ -244,42 +226,11 @@ def continuous_cms(
     watermark emit a bucket's grid once it closes. Exactly-once via
     the file-sink transaction log, resume via the checkpoint.
     """
-    from ..pipeline.cms import CMS_DEPTH, CMS_WIDTH, cms_bucket
-
-    d = depth or CMS_DEPTH
-    w = width or CMS_WIDTH
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                cms_bucket(F.col(key_col), j, w).alias("bucket"),
-            )
-            for j in range(d)
-        ]
+    seq = _sequences(spark, input_dir).withColumn("__w", F.lit(1).cast("long"))
+    rows = cms_cells(seq, key_col, depth, width, carry_cols=("ts", "__w"))
+    return _stream_tier(
+        rows, rollup.CMS, tier, watermark, (), tier_dir, checkpoint_dir
     )
-    rows = seq.select("ts", F.explode(pairs).alias("jb"))
-    agg = (
-        rows.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", unit).alias("w"),
-            F.col("jb.j").alias("j"),
-            F.col("jb.bucket").alias("bucket"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("ts"), "j", "bucket", "cnt")
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def continuous_bloom(
@@ -290,9 +241,8 @@ def continuous_bloom(
     tier: str = "1m",
     key_col: str = "doc_id",
     watermark: str = "2 minutes",
-    k: int | None = None,
-    words: int | None = None,
-    available_now: bool = True,
+    k: int = BLOOM_K,
+    words: int = BLOOM_WORDS,
 ):
     """Streaming Bloom-filter partials — the incremental-ingest mode
     of ``pipeline.bloom.bloom_build``: per closed tier bucket, the
@@ -304,31 +254,11 @@ def continuous_bloom(
     State per open bucket is bounded by the word-table size;
     exactly-once via the file-sink log, resume via the checkpoint.
     """
-    from ..pipeline.bloom import BLOOM_K, BLOOM_WORDS, _exploded_positions
-
-    kk = k or BLOOM_K
-    ww = words or BLOOM_WORDS
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    rows = _exploded_positions(
-        seq.select("ts", key_col), key_col, kk, ww, carry_cols=("ts",)
+    seq = _sequences(spark, input_dir).select("ts", key_col)
+    rows = _exploded_positions(seq, key_col, k, words, carry_cols=("ts",))
+    return _stream_tier(
+        rows, rollup.BLOOM, tier, watermark, (), tier_dir, checkpoint_dir
     )
-    agg = (
-        rows.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", unit).alias("w"), F.col("word"))
-        .agg(F.bit_or("mask").alias("mask"))
-        .select(F.col("w.start").alias("ts"), "word", "mask")
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def continuous_phll(
@@ -339,7 +269,6 @@ def continuous_phll(
     tier: str = "1m",
     key_col: str = "doc_id",
     watermark: str = "2 minutes",
-    available_now: bool = True,
 ):
     """Streaming portable-HLL register partials — the incremental-
     ingest mode of ``pipeline.hll.phll_partial``: per closed tier
@@ -352,26 +281,8 @@ def continuous_phll(
     Exactly-once via the file-sink transaction log, resume via the
     checkpoint — identical contract to the CMS/Bloom ingest twins.
     """
-    from ..pipeline.hll import phll_register_rows
-
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    rows = phll_register_rows(
-        seq.select("ts", key_col), key_col, carry_cols=("ts",)
+    seq = _sequences(spark, input_dir).select("ts", key_col)
+    rows = phll_register_rows(seq, key_col, carry_cols=("ts",))
+    return _stream_tier(
+        rows, rollup.PHLL, tier, watermark, (), tier_dir, checkpoint_dir
     )
-    agg = (
-        rows.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", unit).alias("w"), F.col("idx"))
-        .agg(F.max("rho").alias("rho"))
-        .select(F.col("w.start").alias("ts"), "idx", "rho")
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

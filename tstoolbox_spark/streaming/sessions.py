@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from .continuous import parquet_sink
+
 EVENTS_SCHEMA = (
     "ts timestamp, event_id long, user_id long, event_type string, value double"
 )
@@ -36,7 +38,6 @@ def continuous_session_stats(
     watermark: str = "1 hour",
     key_cols: tuple[str, ...] = ("user_id",),
     value_col: str = "value",
-    available_now: bool = True,
     schema: str = EVENTS_SCHEMA,
 ):
     """Start the streaming session-stats query; returns StreamingQuery."""
@@ -62,12 +63,4 @@ def continuous_session_stats(
             f"{value_col}_sum",
         )
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return parquet_sink(agg, out_dir, checkpoint_dir)

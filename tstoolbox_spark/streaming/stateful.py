@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .continuous import parquet_sink
 from .sessions import EVENTS_SCHEMA
 
 _CHUNK = 64
@@ -64,7 +65,6 @@ def continuous_ewm(
     key_cols: Tuple[str, ...] = ("event_type",),
     value_col: str = "value",
     ts_col: str = "ts",
-    available_now: bool = True,
     schema: str = EVENTS_SCHEMA,
 ):
     """Start the continuous-EWM query; returns StreamingQuery.
@@ -107,12 +107,4 @@ def continuous_ewm(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        result.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return parquet_sink(result, out_dir, checkpoint_dir)
