@@ -189,17 +189,63 @@ def test_semdedup_refuses_oversized_cell(spark, monkeypatch):
         "vec_id": range(30), "embedding": [v.tolist() for v in vecs],
     }))
     cents = [[float(x) for x in vecs[0]]]  # one cell holds everything
-    # shrink the bound so the 30-row cell trips it
-    src = similarity.semdedup.__code__
-    out = similarity.semdedup(emb, cents, threshold=0.5, vectorized=True)
+    out = similarity.semdedup(emb, cents, threshold=0.5)
     # normal size: fine
     assert out.count() == 30
-    # patch the bound via a tiny wrapper: recompile not needed — the
-    # guard reads the closure constant, so drive it with a big n by
-    # constructing >bound rows is too slow; instead assert the guard
-    # string exists at the documented limit
-    import inspect
+    # shrink the bound so the 30-row cell trips it; the bound is read
+    # on the driver, so the worker closure carries the patched value
+    monkeypatch.setattr(similarity, "SEMDEDUP_MAX_CELL", 10)
+    with pytest.raises(Exception, match="use more centroids") as err:
+        similarity.semdedup(emb, cents, threshold=0.5).collect()
+    assert "has 30 rows (> 10)" in str(err.value)
 
-    s = inspect.getsource(similarity.semdedup)
-    assert "max_cell = 20_000" in s and "use more centroids" in s
-    _ = src
+
+def test_vq_quantizer_spans_hugeint_range(spark, tmp_path):
+    """linear_trend / detrend_residuals quantize value to integer
+    micro-units. A value near 1e13 is ~1e19 micro-units, past BIGINT:
+    the Spark side must quantize through DECIMAL(38,0) (the oracle's
+    HUGEINT range) rather than raise, and both engines must agree."""
+    import datetime as dt
+    import math
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import oracle_sql, queries
+
+    t0 = dt.datetime(2024, 1, 1)
+    # group a: values ~1.2e13 a few units apart, so an inexact
+    # quantizer (off by up to half an ulp of 1.2e19) moves the slope
+    big = 1.2345678901234e13
+    vals = [("a", big, 3.5), ("a", big + 0.75, 7.25), ("a", big - 1.5, 11.0),
+            ("b", 2.0, 1.5), ("b", 9.75, 2.5), ("b", 3.125, 40.0)]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(vals)), pa.int64()),
+        "ts": pa.array([t0 + dt.timedelta(hours=h) for _, _, h in vals],
+                       pa.timestamp("us")),
+        "user_id": pa.array([1] * len(vals), pa.int64()),
+        "event_type": [e for e, _, _ in vals],
+        "value": pa.array([v for _, v, _ in vals], pa.float64()),
+        "props": ["{}"] * len(vals),
+    }), tmp_path / "events.parquet")
+
+    def norm(rows):
+        return sorted(
+            tuple("NaN" if isinstance(v, float) and math.isnan(v)
+                  else f"{v:.17g}" if isinstance(v, float) else str(v)
+                  for v in r)
+            for r in rows
+        )
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{tmp_path / 'events.parquet'}')")
+    qs, oracles = queries(), oracle_sql()
+    for name in ("linear_trend", "detrend_residuals"):
+        got = qs[name](spark, str(tmp_path))
+        cols = sorted(got.columns)
+        got_rows = [tuple(r) for r in got.select(*cols).collect()]
+        exp = con.execute(oracles[name]).fetchdf()[cols]
+        assert len(got_rows) == len(exp) > 0, name
+        assert norm(got_rows) == norm(exp.itertuples(index=False)), name

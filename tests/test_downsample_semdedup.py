@@ -175,8 +175,35 @@ def test_semdedup_precomputed_cells_match_default(spark):
     assert a == b
 
 
+# (vec_id, cell, cent_cos, kept) for the fixture below, as the
+# pairwise-join dominance path computed them (a per-pair JVM cosine
+# over an equi-join on cell); the Arrow gram path matched it exactly.
+_SEMDEDUP_JOIN_PATH_ROWS = [
+    (0, 0, 1.0, False), (1, 1, 1.0, False), (2, 2, 1.0, False),
+    (3, 0, -0.02986, True), (4, 0, 0.194883, True), (5, 0, 0.358072, True),
+    (6, 1, 0.4659, False), (7, 2, -0.048259, False), (8, 1, 0.630742, False),
+    (9, 0, 0.286701, True), (10, 0, 0.999999, False), (11, 1, 0.999999, False),
+    (12, 2, 0.999999, False), (13, 0, -0.02959, False), (14, 0, 0.195316, False),
+    (15, 0, 0.358529, False), (16, 1, 0.465858, False), (17, 2, -0.04857, False),
+    (18, 1, 0.630636, False), (19, 0, 0.28689, False), (20, 0, 0.999997, False),
+    (21, 1, 0.999998, False), (22, 2, 0.999997, False), (23, 0, -0.029319, False),
+    (24, 0, 0.195749, False), (25, 0, 0.358986, False), (26, 1, 0.465815, False),
+    (27, 2, -0.04888, False), (28, 1, 0.630528, False), (29, 0, 0.287078, False),
+    (30, 0, 0.999992, False), (31, 1, 0.999995, False), (32, 2, 0.999993, False),
+    (33, 0, -0.029048, False), (34, 0, 0.196182, False), (35, 0, 0.359442, False),
+    (36, 1, 0.465772, False), (37, 2, -0.049191, False), (38, 1, 0.63042, False),
+    (39, 0, 0.287265, False), (40, 0, 0.999987, False), (41, 1, 0.999991, False),
+    (42, 2, 0.999988, False), (43, 0, -0.028776, False), (44, 0, 0.196614, False),
+    (45, 0, 0.359899, False), (46, 1, 0.465729, False), (47, 2, -0.049502, False),
+    (48, 1, 0.63031, False), (49, 0, 0.287453, False), (50, 0, 0.999979, True),
+    (51, 1, 0.999987, True), (52, 2, 0.999981, True), (53, 0, -0.028505, False),
+    (54, 0, 0.197045, False), (55, 0, 0.360356, False), (56, 1, 0.465685, True),
+    (57, 2, -0.049813, True), (58, 1, 0.630199, True), (59, 0, 0.287639, False),
+]
+
+
 def test_semdedup_vectorized_matches_join_path(spark):
-    """The Arrow gram-matrix default must produce EXACTLY the join
+    """The Arrow gram-matrix path must produce EXACTLY the join
     path's dominated set (per-dim left-assoc accumulation is
     bit-identical to the _dot fold)."""
     import numpy as np
@@ -193,9 +220,21 @@ def test_semdedup_vectorized_matches_join_path(spark):
         rows.append((i, [float(x) for x in v]))
     emb = spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding"]))
     cents = [[float(x) for x in base_vecs[i]] for i in range(3)]
-    a = (semdedup(emb, cents, threshold=0.98, vectorized=True)
+    cols = ["vec_id", "cell", "cent_cos", "kept"]
+    a = (semdedup(emb, cents, threshold=0.98)
          .toPandas().sort_values("vec_id").reset_index(drop=True))
-    b = (semdedup(emb, cents, threshold=0.98, vectorized=False)
-         .toPandas().sort_values("vec_id").reset_index(drop=True))
+    b = pd.DataFrame(_SEMDEDUP_JOIN_PATH_ROWS, columns=cols).astype(
+        {"cell": "int32"})
     pd.testing.assert_frame_equal(a, b)
     assert (~a["kept"]).sum() > 0  # the planted dups actually dropped
+
+
+def test_semdedup_zero_norm_vector_raises(spark):
+    """A zero-norm vector has no cosine: the ANSI division in
+    ``cosine`` raises instead of inventing an order for it."""
+    from pyspark.errors import ArithmeticException
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        semdedup(emb, [[1.0, 0.0]], threshold=0.98).collect()

@@ -115,3 +115,24 @@ def test_batch_plan_codes_only_and_no_global_sort(spark, tmp_path):
     assert "TakeOrderedAndProject" not in plan
     assert "WindowGroupLimit" in plan
     out.count()
+
+
+def test_batch_refuses_probe_table_over_byte_bound(spark, monkeypatch):
+    """The driver-side probe-table collect is bounded: a batch whose
+    nqueries*nprobe rows of m*K doubles exceed PROBE_TABLE_MAX_BYTES
+    is refused, not collected."""
+    from tstoolbox_spark.textops import similarity
+
+    emb, vecs, cents, books = _toy(spark)
+    queries = spark.createDataFrame(pd.DataFrame({
+        "query_id": np.asarray([0, 5, 17], dtype=np.int64),
+        "embedding": [vecs[i].tolist() for i in (0, 5, 17)],
+    }))
+    row_bytes = len(books) * len(books[0]) * 8
+    # 3 queries x nprobe=2 = 6 probe rows: exactly at the bound runs
+    monkeypatch.setattr(similarity, "PROBE_TABLE_MAX_BYTES", 6 * row_bytes)
+    assert ivfpq_topk_batch(emb, queries, cents, books, k=5, nprobe=2).count() > 0
+    # one row under it refuses
+    monkeypatch.setattr(similarity, "PROBE_TABLE_MAX_BYTES", 5 * row_bytes)
+    with pytest.raises(ValueError, match="split the query batch"):
+        ivfpq_topk_batch(emb, queries, cents, books, k=5, nprobe=2)

@@ -190,11 +190,24 @@ def test_byte_stats_known_payloads(spark):
     assert t["printable_ratio"] == 1.0 and t["distinct_bytes"] == 2
 
 
+# (asset_id, n_bytes, distinct_bytes, entropy_q6, printable_ratio,
+# nul_ratio) per payload, as the row-per-byte explode path (explode ->
+# groupBy(id, byte) -> per-id sums) computed them; the Arrow
+# histogram path matched it exactly.
+_BYTE_STATS_EXPLODE_PATH_ROWS = {
+    "a": ("a", 768, 256, 5545216, 0.371094, 0.003906),
+    "b": ("b", 13, 9, 2098149, 0.846154, 0.153846),
+    "c": ("c", 100, 1, 0, 0.0, 0.0),
+    "b2": ("b2", 5, 4, 1332180, 0.4, 0.2),
+}
+
+
 def test_byte_stats_vectorized_matches_explode_path(spark):
-    """The Arrow-histogram default must be value-identical to the
+    """The Arrow-histogram path must be value-identical to the
     explode path (same integer counts, same per-term doubles),
     including dropping NULL/empty payloads, and its plan must carry
-    no per-byte exchange."""
+    no per-byte exchange. A repeated id keeps one row per input
+    row: ids are assumed unique, never merged."""
     import pandas as pd
     import pyspark.sql.types as T
 
@@ -212,11 +225,21 @@ def test_byte_stats_vectorized_matches_explode_path(spark):
         ("null", None),
     ]
     df = spark.createDataFrame(rows, sch)
-    vec = byte_stats(df, vectorized=True)
+    vec = byte_stats(df)
     a = vec.toPandas().sort_values("asset_id").reset_index(drop=True)
-    b = (byte_stats(df, vectorized=False)
-         .toPandas().sort_values("asset_id").reset_index(drop=True))
+    cols = ["asset_id", "n_bytes", "distinct_bytes", "entropy_q6",
+            "printable_ratio", "nul_ratio"]
+    want = _BYTE_STATS_EXPLODE_PATH_ROWS
+    b = pd.DataFrame([want["a"], want["b"], want["c"]], columns=cols)
     pd.testing.assert_frame_equal(a, b)
     assert set(a["asset_id"]) == {"a", "b", "c"}
     plan = vec._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+    dup = spark.createDataFrame(
+        [("b", b"hello world\x00\x00"), ("b", b"\x00\x01\x01ab")], sch)
+    d = (byte_stats(dup).toPandas()
+         .sort_values("n_bytes").reset_index(drop=True))
+    b2 = ("b",) + want["b2"][1:]
+    pd.testing.assert_frame_equal(
+        d, pd.DataFrame([b2, want["b"]], columns=cols))

@@ -164,26 +164,57 @@ def sniff_media_type(
     return df.withColumn(out_col, expr.otherwise(SNIFF_FALLBACK))
 
 
+def _byte_hist(batches):
+    """mapInArrow body for :func:`byte_stats`: (id, payload) batches →
+    (id, 256-bin byte histogram) for every non-NULL, non-empty
+    payload. One ``np.bincount`` per kept row over its slice of the
+    BinaryArray's data buffer (no per-byte temporaries), written into
+    one preallocated (rows, 256) int64 block that backs ``__counts``."""
+    import pyarrow as pa
+
+    for batch in batches:
+        ids, pay = batch.column(0), batch.column(1)
+        width = 8 if pa.types.is_large_binary(pay.type) else 4
+        offsets = np.frombuffer(
+            pay.buffers()[1], dtype=f"<i{width}", count=len(pay) + 1,
+            offset=pay.offset * width,
+        )
+        keep = np.diff(offsets) > 0
+        if pay.null_count:
+            keep &= pay.is_valid().to_numpy(zero_copy_only=False)
+        rows = np.flatnonzero(keep)
+        if not rows.size:
+            continue
+        data = np.frombuffer(pay.buffers()[2], dtype=np.uint8)
+        counts = np.empty((rows.size, 256), dtype=np.int64)
+        for j, r in enumerate(rows):
+            counts[j] = np.bincount(
+                data[offsets[r]:offsets[r + 1]], minlength=256
+            )
+        hist = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, counts.size + 1, 256, dtype=np.int32)),
+            pa.array(counts.ravel(), pa.int64()),
+        )
+        yield pa.RecordBatch.from_arrays(
+            [ids.filter(pa.array(keep)), hist],
+            names=[batch.schema.names[0], "__counts"],
+        )
+
+
 def byte_stats(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "asset_id",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Codec-free byte-level payload statistics — the routing signal a
     100 TB multimodal pipeline computes BEFORE any decode stage:
     Shannon byte entropy (compressed/encrypted ≈ 8 bits, text ≈ 4-5),
     printable and NUL ratios, distinct byte count.
 
-    Default path (``vectorized=True``): ONE Arrow batch pass builds a
-    256-bin histogram per payload (``np.bincount`` over the raw
-    bytes), then every statistic is a JVM array expression over the
-    counts — zero shuffle, one output row per asset. The previous
-    explode path shuffled one ROW PER BYTE (O(total payload bytes)
-    through the exchange — the wrong shape at 100 TB); it is kept as
-    ``vectorized=False`` because it is pure JVM expressions, and the
-    two are value-identical (same integer counts, same per-term
-    double arithmetic; parity-tested).
+    ONE Arrow batch pass builds a 256-bin histogram per payload, then
+    every statistic is a JVM array expression over the counts — zero
+    shuffle, one output row per input row (``id_col`` is assumed
+    unique; rows sharing an id are not merged).
 
     Entropy terms are floor-quantized to 1e-6 per distinct byte before
     the sum, so ``entropy_q6`` (nats·10⁶) is an association-free
@@ -191,118 +222,37 @@ def byte_stats(
 
     Output: (id_col, n_bytes, distinct_bytes, entropy_q6,
     printable_ratio, nul_ratio). Assets with NULL/empty payloads are
-    absent from the output on both paths.
+    absent from the output.
     """
-    if vectorized:
-        id_type = df.schema[id_col].dataType.simpleString()
-
-        def gen(batches):
-            import numpy as np
-
-            for pdf in batches:
-                ids, counts = [], []
-                for aid, payload in zip(pdf[id_col], pdf[payload_col]):
-                    if payload is None:
-                        continue
-                    buf = bytes(payload)
-                    if not buf:
-                        continue
-                    ids.append(aid)
-                    counts.append(
-                        np.bincount(
-                            np.frombuffer(buf, dtype=np.uint8), minlength=256
-                        ).astype("int64").tolist()
-                    )
-                if not ids:
-                    # an all-null/empty batch: yield nothing (an empty
-                    # frame's numeric-dtype columns break Arrow's
-                    # list<int64> conversion)
-                    continue
-                yield pd.DataFrame({
-                    id_col: pd.Series(ids, dtype="object"),
-                    "__counts": pd.Series(counts, dtype="object"),
-                })
-
-        hist = df.select(id_col, payload_col).mapInPandas(
-            gen, schema=f"{id_col} {id_type}, __counts array<long>"
-        )
-        cnts = F.col("__counts")
-        n = F.aggregate(cnts, F.lit(0).cast("long"), lambda a, c: a + c)
-        nz = F.filter(cnts, lambda c: c > 0)
-
-        def ent_term(c):
-            p = c.cast("double") / F.col("n_bytes")
-            return F.floor(-(p * F.log(p)) * F.lit(1e6) + F.lit(0.5)).cast("long")
-
-        printable = F.aggregate(
-            F.slice(cnts, 33, 95), F.lit(0).cast("long"), lambda a, c: a + c
-        )
-        return (
-            hist.withColumn("n_bytes", n)
-            .select(
-                id_col,
-                "n_bytes",
-                F.size(nz).cast("long").alias("distinct_bytes"),
-                F.aggregate(
-                    nz, F.lit(0).cast("long"), lambda a, c: a + ent_term(c)
-                ).alias("entropy_q6"),
-                F.round(
-                    printable.cast("double") / F.col("n_bytes"), 6
-                ).alias("printable_ratio"),
-                F.round(
-                    F.element_at(cnts, 1).cast("double") / F.col("n_bytes"), 6
-                ).alias("nul_ratio"),
-            )
-        )
-
-    from .textops.dedup import let
-
-    hx = F.hex(F.col(payload_col))
-    # guard the empty payload: Spark's sequence(1, 0) is DESCENDING
-    # ([1, 0]), so an unguarded transform fabricates two bogus byte
-    # rows for a zero-length payload (latent bug found by the
-    # vectorized-path parity test)
-    bytes_arr = let(
-        hx,
-        lambda h: F.when(
-            F.length(h) >= F.lit(2),
-            F.transform(
-                F.sequence(F.lit(1), (F.length(h) / 2).cast("int")),
-                lambda i: F.conv(
-                    F.substring(h, (i * 2 - 1).cast("int"), 2), 16, 10
-                ).cast("int"),
-            ),
-        ).otherwise(F.array().cast("array<int>")),
+    id_type = df.schema[id_col].dataType.simpleString()
+    hist = df.select(id_col, payload_col).mapInArrow(
+        _byte_hist, schema=f"{id_col} {id_type}, __counts array<long>"
     )
-    ex = df.select(
-        F.col(id_col).alias("aid"), F.explode(bytes_arr).alias("b")
+    cnts = F.col("__counts")
+    n = F.aggregate(cnts, F.lit(0).cast("long"), lambda a, c: a + c)
+    nz = F.filter(cnts, lambda c: c > 0)
+
+    def ent_term(c):
+        p = c.cast("double") / F.col("n_bytes")
+        return F.floor(-(p * F.log(p)) * F.lit(1e6) + F.lit(0.5)).cast("long")
+
+    printable = F.aggregate(
+        F.slice(cnts, 33, 95), F.lit(0).cast("long"), lambda a, c: a + c
     )
-    per_byte = ex.groupBy("aid", "b").agg(F.count(F.lit(1)).alias("c"))
-    tot = per_byte.groupBy("aid").agg(F.sum("c").alias("n"))
-    j = per_byte.join(F.broadcast(tot), "aid")
-    p = F.col("c").cast("double") / F.col("n")
-    stats = j.groupBy("aid").agg(
-        F.max("n").alias("n_bytes"),
-        F.count(F.lit(1)).alias("distinct_bytes"),
-        F.sum(
-            F.floor(-(p * F.log(p)) * F.lit(1e6) + F.lit(0.5))
-        ).cast("long").alias("entropy_q6"),
-        F.round(
-            F.sum(F.when((F.col("b") >= 32) & (F.col("b") <= 126), F.col("c"))
-                  .otherwise(F.lit(0))).cast("double") / F.max("n"),
-            6,
-        ).alias("printable_ratio"),
-        F.round(
-            F.sum(F.when(F.col("b") == 0, F.col("c")).otherwise(F.lit(0)))
-            .cast("double") / F.max("n"),
-            6,
-        ).alias("nul_ratio"),
-    )
-    return stats.select(
-        F.col("aid").alias(id_col),
-        "n_bytes",
-        "distinct_bytes",
-        "entropy_q6",
-        "printable_ratio",
-        "nul_ratio",
+    return (
+        hist.withColumn("n_bytes", n)
+        .select(
+            id_col,
+            "n_bytes",
+            F.size(nz).cast("long").alias("distinct_bytes"),
+            F.aggregate(
+                nz, F.lit(0).cast("long"), lambda a, c: a + ent_term(c)
+            ).alias("entropy_q6"),
+            F.round(
+                printable.cast("double") / F.col("n_bytes"), 6
+            ).alias("printable_ratio"),
+            F.round(
+                F.element_at(cnts, 1).cast("double") / F.col("n_bytes"), 6
+            ).alias("nul_ratio"),
+        )
     )

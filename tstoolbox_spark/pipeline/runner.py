@@ -48,7 +48,7 @@ def run_pipeline(
     work_dir: str,
     n_buckets: int = bucketing.DEFAULT_BUCKETS,
     target_rows_per_cell: int = 250_000,
-    verify: bool | str = True,
+    verify: bool = True,
     ttl_days: dict[str, int] | None = None,
     now: dt.datetime | None = None,
     key_cols: tuple[str, ...] = ("source",),
@@ -117,8 +117,7 @@ def run_pipeline(
 
     # ---- round-trip verification (north-rule invariant) ---------------
     if verify:
-        mode = verify if isinstance(verify, str) else "hash"
-        rt = compress.verify_roundtrip(cells, compress.decompress(comp), mode=mode)
+        rt = compress.verify_roundtrip(cells, compress.decompress(comp), mode="hash")
         metrics["roundtrip"] = rt
         if rt["mismatched"]:
             raise AssertionError(f"token round-trip mismatch: {rt}")
